@@ -428,8 +428,8 @@ class AriadneIndex:
         return idx
 
     def local(self):
-        """Driver-local snapshot for latency-critical serving (built
-        lazily, once per index — see operators/local_cache.py)."""
+        """Driver-local snapshot, the tool server's read path (built
+        once per index — see operators/local_cache.py)."""
         if self._local is None:
             from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
 

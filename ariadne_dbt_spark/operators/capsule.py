@@ -138,6 +138,35 @@ def minimal_context(row, cols, distance) -> dict:
     }
 
 
+def pivot_confidence(explicit: bool, scores: list[float]) -> str:
+    """Reference heuristic (capsule.py:272-304): explicit anchors →
+    high; clear score separation → high/medium; else low."""
+    if explicit:
+        return "high"
+    if len(scores) >= 3 and scores[2] > 0 and scores[0] > 2 * scores[2]:
+        return "high"
+    if len(scores) >= 2 and scores[1] > 0 and scores[0] > 1.5 * scores[1]:
+        return "medium"
+    if 1 <= len(scores) <= 2 and scores[0] > 5.0:
+        return "medium"
+    return "low"
+
+
+def greedy_fill(items: list[dict], alloc: int, *, break_on_overflow: bool) -> list[dict]:
+    """Budget fill (C2/C3, reference: capsule.py:325-396): take items in
+    order while they fit; on overflow either stop (up/downstream) or skip
+    and keep trying smaller items (pivots/tests)."""
+    out, used = [], 0
+    for it in items:
+        cost = estimate_tokens(it)
+        if used + cost <= alloc:
+            out.append(it)
+            used += cost
+        elif break_on_overflow:
+            break
+    return out
+
+
 class CapsuleBuilder:
     def __init__(self, index: AriadneIndex, config: EngineConfig | None = None):
         self.index = index
@@ -198,34 +227,6 @@ class CapsuleBuilder:
                 add(h.unique_id)
         return pivots, scores, explicit
 
-    @staticmethod
-    def _confidence(explicit: bool, scores: list[float]) -> str:
-        """Reference heuristic (capsule.py:272-304): explicit anchors →
-        high; clear score separation → high/medium; else low."""
-        if explicit:
-            return "high"
-        if len(scores) >= 3 and scores[2] > 0 and scores[0] > 2 * scores[2]:
-            return "high"
-        if len(scores) >= 2 and scores[1] > 0 and scores[0] > 1.5 * scores[1]:
-            return "medium"
-        if 1 <= len(scores) <= 2 and scores[0] > 5.0:
-            return "medium"
-        return "low"
-
-    # -- budget fill (C2/C3, reference: capsule.py:325-396) ------------------
-    @staticmethod
-    def _greedy_fill(items: list[dict], alloc: int, *, break_on_overflow: bool) -> list[dict]:
-        out, used = [], 0
-        for it in items:
-            cost = estimate_tokens(it)
-            if used + cost <= alloc:
-                out.append(it)
-                used += cost
-            elif break_on_overflow:
-                break
-            # else: skip and keep trying smaller items (pivot/test semantics)
-        return out
-
     # -- main entry (reference: capsule.py:136-205) ---------------------------
     def build(
         self,
@@ -244,7 +245,7 @@ class CapsuleBuilder:
         pivots, scores, explicit = self._select_pivots(
             task, intent, focus_model, entry_models, entry_paths, cfg.max_pivots
         )
-        confidence = self._confidence(explicit, scores)
+        confidence = pivot_confidence(explicit, scores)
         cap = Capsule(task=task, intent=intent, confidence=confidence, token_budget=budget)
         if not pivots:
             cap.patterns = extract_patterns(self.index)
@@ -288,21 +289,21 @@ class CapsuleBuilder:
         pivot_items = [
             self._full_context(rows[p], cols_by_model[p]) for p in pivots if p in rows
         ]
-        cap.pivots = self._greedy_fill(pivot_items, alloc["pivot"], break_on_overflow=False)
+        cap.pivots = greedy_fill(pivot_items, alloc["pivot"], break_on_overflow=False)
 
         up_items = [
             self._skeleton_context(rows[u], cols_by_model[u], d)
             for u, d in sorted(up_ids, key=lambda x: (x[1], x[0]))
             if u in rows
         ]
-        cap.upstream = self._greedy_fill(up_items, alloc["upstream"], break_on_overflow=True)
+        cap.upstream = greedy_fill(up_items, alloc["upstream"], break_on_overflow=True)
 
         down_items = [
             self._minimal_context(rows[u], cols_by_model[u], d)
             for u, d in sorted(down_ids, key=lambda x: (x[1], x[0]))
             if u in rows
         ]
-        cap.downstream = self._greedy_fill(down_items, alloc["downstream"], break_on_overflow=True)
+        cap.downstream = greedy_fill(down_items, alloc["downstream"], break_on_overflow=True)
 
         # related context (tests J5, macros J6, sources J4) per pivot
         test_items, macro_items, source_items = [], [], []
@@ -316,8 +317,8 @@ class CapsuleBuilder:
             macro_items += [r.asDict() for r in macros_used(self.index, p).collect()]
             source_items += [r.asDict() for r in direct_sources(self.index, p).collect()]
         half = alloc["tests_macros"] // 2  # tests capped at half (capsule.py:388)
-        cap.tests = self._greedy_fill(test_items, half, break_on_overflow=False)
-        cap.macros = self._greedy_fill(macro_items, alloc["tests_macros"] - half, break_on_overflow=False)
+        cap.tests = greedy_fill(test_items, half, break_on_overflow=False)
+        cap.macros = greedy_fill(macro_items, alloc["tests_macros"] - half, break_on_overflow=False)
         # dedup sources preserving first-seen order (E3)
         seen = set()
         cap.sources = [

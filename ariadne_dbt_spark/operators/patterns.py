@@ -16,14 +16,9 @@ from pyspark.sql.window import Window
 from ariadne_dbt_spark.ingest.indexer import AriadneIndex
 
 
-def project_stats(index: AriadneIndex) -> dict:
-    """A4/A5/A9: global counts + tested-column distinct count."""
-    tested_cols = (
-        index.tests.where(F.col("column_name") != "")
-        .select("model_id", "column_name")
-        .distinct()
-        .count()
-    )
+def table_counts(index: AriadneIndex) -> dict:
+    """A4/A5: row counts of the index tables — the pattern bundle's
+    ``stats``."""
     return {
         "models": index.models.count(),
         "sources": index.sources.count(),
@@ -31,6 +26,20 @@ def project_stats(index: AriadneIndex) -> dict:
         "macros": index.macros.count(),
         "exposures": index.exposures.count(),
         "columns": index.columns.count(),
+    }
+
+
+def project_stats(index: AriadneIndex) -> dict:
+    """A4/A5/A9: table counts + tested-column distinct count + source
+    schema count (the CLI ``stats`` command)."""
+    tested_cols = (
+        index.tests.where(F.col("column_name") != "")
+        .select("model_id", "column_name")
+        .distinct()
+        .count()
+    )
+    return {
+        **table_counts(index),
         "tested_columns": tested_cols,
         "source_schemas": index.sources.select("source_name").distinct().count(),
     }
@@ -145,7 +154,7 @@ def extract_patterns(index: AriadneIndex) -> dict:
     """The full pattern bundle the generator/capsule embeds
     (reference: patterns.py:22-125) — everything collected, KB-sized."""
     return {
-        "stats": project_stats(index),
+        "stats": table_counts(index),
         "models_per_layer": {r.layer: r.n for r in models_per_layer(index).collect()},
         "materializations": {
             r.layer: r.dominant_materialization

@@ -10,6 +10,15 @@ Tools (names mirror the reference):
     refresh_index, usage_stats, find_models_by_column,
     find_models_by_path, rate_capsule, detect_antipatterns
 
+Every read tool answers from the index's driver-local snapshot
+(``AriadneIndex.local()``, operators/local_cache.py) and launches no
+Spark job: the snapshot is built when the server starts and again by
+``refresh_index``, never on a read, and the server's memory envelope is
+the snapshot's. The DataFrame operators the snapshot twins
+(model_search, lineage, capsule, patterns, antipatterns) are the batch
+and registry path; tests/test_server_parity.py pins every tool's answer
+to them.
+
 Every call is usage-logged (S8) with duration, like the reference.
 """
 
@@ -19,108 +28,83 @@ import json
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 from ariadne_dbt_spark.ingest.indexer import AriadneIndex
-from ariadne_dbt_spark.operators.capsule import CapsuleBuilder, detect_intent
-from ariadne_dbt_spark.operators.lineage import get_impact_analysis, get_lineage
-from ariadne_dbt_spark.operators.model_search import (
-    columns_with_tests,
-    coverage_stats,
-    direct_sources,
-    find_by_column,
-    find_by_path,
-    get_model_by_name,
-    macros_used,
-    search_models,
-)
-from ariadne_dbt_spark.operators.patterns import extract_patterns
+from ariadne_dbt_spark.operators.capsule import detect_intent, greedy_fill
 from ariadne_dbt_spark.operators.usage import SessionEventLog, UsageLog
 
 
 class ToolServer:
     def __init__(self, index: AriadneIndex, *, usage_dir: str | None = None):
         self.index = index
+        self.index.local()  # build the snapshot now, so no read pays for it
         self.usage = UsageLog(index.spark, usage_dir) if usage_dir else None
         self.events = (
             SessionEventLog(index.spark, usage_dir + "_session_events")
             if usage_dir
             else None
         )
-        self.builder = CapsuleBuilder(index)
         #: log id of the most recent get_context_capsule call — the target
         #: of rate_capsule (reference: server.py:21,111,513)
         self._last_capsule_log_id: int | None = None
         #: one server process = one session in the events log
         self._session_id = "server"
 
+    @property
+    def cache(self):
+        """The snapshot every read tool answers from."""
+        return self.index.local()
+
     # -- tools ---------------------------------------------------------------
     def search_models(self, query: str, limit: int = 10, layer: str | None = None,
                       intent: str = "explore") -> dict:
         limit = max(1, min(int(limit), 50))  # O7 clamp (reference: server.py:363)
-        hits = search_models(self.index, query, intent=intent, limit=limit, layer=layer)
-        return {"results": [r.asDict() for r in hits.collect()]}
+        return {"results": self.cache.search(query, intent=intent, limit=limit, layer=layer)}
 
     def get_model_details(self, model_name: str) -> dict:
         # name OR unique_id lookup (reference: server.py:196); error text
         # points at search_models like the reference's hint
-        row = get_model_by_name(self.index, model_name).first()
-        if row is None:
-            from ariadne_dbt_spark.operators.model_search import get_model_by_id
-
-            row = get_model_by_id(self.index, model_name).first()
+        cache = self.cache
+        row = cache.by_name(model_name) or cache.models.get(model_name)
         if row is None:
             return {
                 "error": f"model not found: {model_name}. "
                 "Use search_models to find similar names."
             }
-        uid = row.unique_id
-        from ariadne_dbt_spark.operators.graph import neighbors
+        uid = row["unique_id"]
 
-        names = {
-            r["unique_id"]: r["name"]
-            for r in self.index.models.select("unique_id", "name").collect()
-        }
-        nbrs = neighbors(self.index.edges, uid).collect()
+        def names(ids):
+            return sorted(cache.models[u]["name"] for u in ids if u in cache.models)
+
         return {
             "model": {k: row[k] for k in (
                 "unique_id", "name", "layer", "materialization", "description",
                 "file_path", "upstream_count", "downstream_count", "centrality")},
             # reference returns the executable definition too (server.py:226)
             "compiled_sql": row["compiled_code"] or row["raw_code"] or "",
-            "columns": [r.asDict() for r in columns_with_tests(self.index, uid).collect()],
+            "columns": cache.columns_with_tests(uid),
             "tests": [
                 {k: t[k] for k in ("unique_id", "name", "test_type", "column_name")}
-                for t in self.index.tests.where(F.col("model_id") == uid).collect()
+                for t in cache.tests.get(uid, ())
             ],
-            "upstream": sorted(
-                names[r["unique_id"]] for r in nbrs
-                if r["relationship"] == "upstream" and r["unique_id"] in names
-            ),
-            "downstream": sorted(
-                names[r["unique_id"]] for r in nbrs
-                if r["relationship"] == "downstream" and r["unique_id"] in names
-            ),
-            "coverage": coverage_stats(self.index, uid),
-            "macros": [r.asDict() for r in macros_used(self.index, uid).collect()],
-            "sources": [r.asDict() for r in direct_sources(self.index, uid).collect()],
+            "upstream": names(cache.parents.get(uid, ())),
+            "downstream": names(cache.children.get(uid, ())),
+            "coverage": cache.coverage(uid),
+            "macros": cache.macros_used(uid),
+            "sources": cache.direct_sources(uid),
         }
 
     def get_lineage(self, model_name: str, depth: int = 3, direction: str = "both") -> dict:
         depth = max(1, min(int(depth), 10))  # O7 clamp
-        row = get_model_by_name(self.index, model_name).first()
+        row = self.cache.by_name(model_name)
         if row is None:
             return {"error": f"model not found: {model_name}"}
-        lin = get_lineage(self.index, row.unique_id, depth=depth, direction=direction)
-        return {"lineage": [r.asDict() for r in lin.collect()]}
+        return {"lineage": self.cache.lineage(row["unique_id"], depth=depth, direction=direction)}
 
     def get_impact_analysis(self, model_name: str, depth: int = 5) -> dict:
-        row = get_model_by_name(self.index, model_name).first()
+        row = self.cache.by_name(model_name)
         if row is None:
             return {"error": f"model not found: {model_name}"}
-        imp = get_impact_analysis(self.index, row.unique_id, depth=min(int(depth), 10))
-        imp.pop("affected", None)
-        return imp
+        return self.cache.impact(row["unique_id"], depth=min(int(depth), 10))
 
     def discover_models(
         self,
@@ -133,7 +117,7 @@ class ToolServer:
         # reference: server.py:117-146 — discover accepts the same
         # focus/entry anchors as get_context_capsule
         return {
-            "models": self.builder.discover(
+            "models": self.cache.discover(
                 task,
                 focus_model=focus_model,
                 entry_models=entry_models,
@@ -146,11 +130,10 @@ class ToolServer:
                             entry_models: list[str] | None = None,
                             entry_paths: list[str] | None = None,
                             token_budget: int | None = None) -> dict:
-        cap = self.builder.build(
+        out = self.cache.capsule(
             task, focus_model=focus_model, entry_models=entry_models,
             entry_paths=entry_paths, token_budget=token_budget,
         )
-        out = cap.to_dict()
         # session memory (reference reserves session_context and its 5%
         # budget fraction but always emits {}; roadmap v1.0 "session
         # memory"): prior events of THIS server session, newest first,
@@ -171,9 +154,7 @@ class ToolServer:
                 for e in reversed(recent)
             ]
             out["session_context"] = {
-                "recent_events": CapsuleBuilder._greedy_fill(
-                    items, alloc, break_on_overflow=False
-                )
+                "recent_events": greedy_fill(items, alloc, break_on_overflow=False)
             }
             out["token_estimate"] = estimate_tokens(out)
             self.events.record(
@@ -185,13 +166,13 @@ class ToolServer:
     def find_models_by_column(self, column_name: str, limit: int = 20) -> dict:
         """Reference: server.py:399-420 — partial column-name match."""
         limit = max(1, min(int(limit), 50))
-        results = [r.asDict() for r in find_by_column(self.index, column_name, limit=limit).collect()]
+        results = self.cache.find_by_column(column_name, limit=limit)
         return {"column_name": column_name, "count": len(results), "results": results}
 
     def find_models_by_path(self, path_pattern: str, limit: int = 20) -> dict:
         """Reference: server.py:425-445 — LIKE pattern over file_path."""
         limit = max(1, min(int(limit), 50))
-        results = [r.asDict() for r in find_by_path(self.index, path_pattern, limit=limit).collect()]
+        results = self.cache.find_by_path(path_pattern, limit=limit)
         return {"path_pattern": path_pattern, "count": len(results), "results": results}
 
     def rate_capsule(self, rating: int, notes: str | None = None) -> dict:
@@ -213,15 +194,15 @@ class ToolServer:
         return {"success": True, "log_id": log_id, "rating": rating}
 
     def get_project_patterns(self) -> dict:
-        return extract_patterns(self.index)
+        return self.cache.patterns()
 
     def detect_antipatterns(self, rules: list[str] | None = None) -> dict:
         """Project anti-pattern report (reference README roadmap v1.0;
         rule set in operators/antipatterns.py)."""
-        from ariadne_dbt_spark.operators.antipatterns import RULES, detect_antipatterns
+        from ariadne_dbt_spark.operators.antipatterns import RULES
 
         wanted = tuple(r for r in (rules or RULES) if r in RULES)
-        rows = [r.asDict() for r in detect_antipatterns(self.index, wanted).collect()]
+        rows = self.cache.antipatterns(wanted)
         by_rule: dict[str, int] = {}
         for r in rows:
             by_rule[r["rule"]] = by_rule.get(r["rule"], 0) + 1
@@ -236,10 +217,10 @@ class ToolServer:
             manifest_path,
             catalog_path=catalog_path, run_results_path=run_results_path,
         )
-        self.builder = CapsuleBuilder(self.index)
+        cache = self.index.local()  # the new snapshot, built before any read
         return {
             "status": "ok",
-            "models": self.index.models.count(),
+            "models": len(cache.models),
             "delta": self.index.last_refresh_stats,
         }
 

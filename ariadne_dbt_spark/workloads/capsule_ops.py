@@ -107,11 +107,11 @@ _FILL_ALLOC = 900  # tokens; = int(4500 * BUDGET_FRACTIONS["upstream"])
     ORDER BY strategy, unique_id
     """,
     survey="C2,C3,C1,O5",
-    doc="Greedy fill through the real _greedy_fill: break keeps a strict "
+    doc="Greedy fill through the real greedy_fill: break keeps a strict "
     "prefix, skip hops overflowing items (reference: capsule.py:345-363).",
 )
 def meta_budget_fill_break_vs_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
+    from ariadne_dbt_spark.operators.capsule import greedy_fill
 
     idx = synthetic_index(spark, sf_dir)
     ids = [f"model.shop.m_{k}" for k in range(60)]
@@ -130,7 +130,7 @@ def meta_budget_fill_break_vs_skip(spark: SparkSession, sf_dir: str) -> DataFram
     ]
     out = []
     for strategy, brk in (("break", True), ("skip", False)):
-        kept = CapsuleBuilder._greedy_fill(items, _FILL_ALLOC, break_on_overflow=brk)
+        kept = greedy_fill(items, _FILL_ALLOC, break_on_overflow=brk)
         out += [(strategy, it["unique_id"]) for it in kept]
     return spark.createDataFrame(
         sorted(out), "strategy string, unique_id string"
@@ -264,7 +264,7 @@ def meta_skeleton_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "confidence from the score distribution.",
 )
 def meta_pivot_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder
+    from ariadne_dbt_spark.operators.capsule import CapsuleBuilder, pivot_confidence
 
     idx = synthetic_index(spark, sf_dir)
     b = CapsuleBuilder(idx)
@@ -272,12 +272,12 @@ def meta_pivot_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv, scores, explicit = b._select_pivots(
         "zzz unfindable", "explore", None, ["m_5", "m_8"], None, 3
     )
-    conf = b._confidence(explicit, scores)
+    conf = pivot_confidence(explicit, scores)
     out += [("explicit", i + 1, u, conf) for i, u in enumerate(pv)]
     pv2, scores2, explicit2 = b._select_pivots(
         "red widget", "explore", None, None, None, 3
     )
-    conf2 = b._confidence(explicit2, scores2)
+    conf2 = pivot_confidence(explicit2, scores2)
     out += [("search", i + 1, u, conf2) for i, u in enumerate(pv2)]
     return spark.createDataFrame(
         sorted(out), "mode string, ord long, unique_id string, confidence string"

@@ -45,17 +45,49 @@ def test_local_lineage_matches_spark(index, cache):
 
 
 def test_local_patterns_match_spark(index, cache):
-    sp = extract_patterns(index)
-    lo = cache.patterns()
-    for key in (
-        "models_per_layer", "materializations", "examples", "naming",
-        "coverage", "top_tags", "best_tested",
-    ):
-        assert lo[key] == sp[key], key
-    assert lo["stats"] == {
-        k: sp["stats"][k]
-        for k in ("models", "sources", "tests", "macros", "exposures", "columns")
-    }
+    assert cache.patterns() == extract_patterns(index)
+
+
+def test_example_model_tie_breaks_on_lowest_name():
+    """Most columns, then longest description, then the LOWEST name —
+    also when one name is a prefix of the other."""
+    from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
+
+    def model(name):
+        return {"unique_id": f"model.p.{name}", "name": name, "layer": "intermediate",
+                "materialization": "view", "description": "same", "tags": []}
+
+    cache = LocalIndexCache()
+    for name in ("int_campaigns_81", "int_campaigns_8"):
+        cache.models[f"model.p.{name}"] = model(name)
+        cache.columns[f"model.p.{name}"] = [{"name": "id"}]
+    assert cache.patterns()["examples"] == {"intermediate": "int_campaigns_8"}
+
+
+def test_snapshot_honours_index_config(spark):
+    """A non-default EngineConfig changes the snapshot's answers exactly
+    as it changes the DataFrame operators'."""
+    from ariadne_dbt_spark.config import EngineConfig
+    from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+    from conftest import MANIFEST
+
+    cfg = EngineConfig(search_limit_cap=2, description_truncate=12, discover_limit=3,
+                       max_pivots=1, token_budget=3000)
+    idx = AriadneIndex.build(spark, MANIFEST, config=cfg)
+    cache = idx.local()
+    hits = cache.search("customer orders", limit=10)
+    assert len(hits) == 2
+    assert all(len(h["description"]) <= 12 for h in hits)
+    assert [(h["unique_id"], h["description"], round(h["score"], 9)) for h in hits] == [
+        (r.unique_id, r.description, round(r.score, 9))
+        for r in search_models(idx, "customer orders", limit=10).collect()
+    ]
+    task = "debug revenue order totals"
+    assert len(cache.discover(task, limit=40)) == 3
+    assert cache.discover(task, limit=40) == CapsuleBuilder(idx).discover(task, limit=40)
+    lo = cache.capsule(task)
+    assert lo["token_budget"] == 3000 and len(lo["pivots"]) == 1
+    assert lo == CapsuleBuilder(idx).build(task).to_dict()
 
 
 def test_local_capsule_matches_spark(index, cache):
