@@ -12,12 +12,20 @@ recomputes everything from the manifest. Derived computations:
 * PK/FK flags      — columns⋈tests: PK iff ≥2 distinct test types among
                      {unique, not_null}; FK iff any relationships test (J3)
 * search postings  — 5 weighted fields, SQL truncated to 2000 chars (S6/T9)
+
+Catalog and run-results enrichment patch the parsed rows before any
+DataFrame exists. On the metadata-scale path (``local_build_max_models``)
+every derivation runs in Python over the same rows, which also lay out
+the serving snapshot (``LocalIndexCache.from_rows``); build and refresh
+run zero Spark jobs there.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
+from itertools import chain
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +34,7 @@ from ariadne_dbt_spark import schemas
 from ariadne_dbt_spark.config import EngineConfig
 from ariadne_dbt_spark.ingest import manifest as mf
 from ariadne_dbt_spark.functions.text import truncate_sql
+from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
 from ariadne_dbt_spark.operators.search import build_postings
 
 def _derive_degrees_local(model_rows: list[dict], edge_rows: list[dict]) -> None:
@@ -77,7 +86,6 @@ def _doc_signature(m: dict, col_names: list[str], config: EngineConfig) -> str:
     preserve column row order, so an order-sensitive hash would flag
     spurious deltas after every save/load round-trip."""
     import hashlib
-    import json
 
     sql_src = m.get("compiled_code") or m.get("raw_code") or ""
     payload = json.dumps(
@@ -91,6 +99,119 @@ def _doc_signature(m: dict, col_names: list[str], config: EngineConfig) -> str:
         ensure_ascii=False,
     )
     return hashlib.md5(payload.encode()).hexdigest()
+
+
+def _doc_signatures(model_rows, column_rows, config: EngineConfig) -> dict[str, str]:
+    """``unique_id → _doc_signature`` for every model row."""
+    col_names: dict[str, list[str]] = {}
+    for c in column_rows:
+        col_names.setdefault(c["model_id"], []).append(c["name"])
+    return {
+        m["unique_id"]: _doc_signature(m, col_names.get(m["unique_id"], []), config)
+        for m in model_rows
+    }
+
+
+def _enrich_from_catalog(catalog_path: str, model_rows: list[dict], column_rows: list[dict]) -> None:
+    """S2: catalog stats (row_count/bytes/last_modified) into the model
+    rows and catalog column types into the column rows. Column names
+    match case-insensitively; an exact-case match wins, else the first
+    match in catalog order, so every manifest column stays one row. An
+    empty catalog type keeps the manifest's."""
+    with open(catalog_path) as f:
+        nodes = json.load(f).get("nodes") or {}
+
+    def stat(stats: dict, name: str) -> int | None:
+        v = (stats.get(name) or {}).get("value")
+        try:
+            return int(float(v)) if v is not None else None
+        except (TypeError, ValueError):
+            return None
+
+    for m in model_rows:
+        node = nodes.get(m["unique_id"])
+        if node is None:
+            continue
+        stats = node.get("stats") or {}
+        m["row_count"] = stat(stats, "num_rows") or stat(stats, "row_count")
+        m["bytes"] = stat(stats, "num_bytes") or stat(stats, "bytes")
+        m["last_modified"] = (node.get("metadata") or {}).get("last_modified") or (
+            stats.get("last_modified") or {}
+        ).get("value")
+
+    # per node: (name → type, lowered name → type), first in catalog order
+    types: dict[str, tuple[dict, dict]] = {}
+    for uid, node in nodes.items():
+        exact, lower = types[uid] = ({}, {})
+        for cname, c in (node.get("columns") or {}).items():
+            name, data_type = str(c.get("name") or cname), str(c.get("type") or "")
+            exact.setdefault(name, data_type)
+            lower.setdefault(name.lower(), data_type)
+    for c in column_rows:
+        if c["model_id"] not in types:
+            continue
+        exact, lower = types[c["model_id"]]
+        data_type = exact.get(c["name"], lower.get(c["name"].lower()))
+        if data_type:
+            c["data_type"] = data_type
+
+
+def _enrich_from_run_results(path: str, test_rows: list[dict]) -> None:
+    """S3: test status + Σ(timing deltas) + failures into the test rows
+    (the first result per test wins)."""
+    from datetime import datetime
+
+    with open(path) as f:
+        rr = json.load(f)
+    results: dict[str, tuple] = {}
+    for r in rr.get("results") or []:
+        uid = r.get("unique_id") or ""
+        if not uid.startswith("test.") or uid in results:
+            continue
+        total = 0.0
+        for t in r.get("timing") or []:
+            try:
+                t0 = datetime.fromisoformat(str(t["started_at"]).replace("Z", "+00:00"))
+                t1 = datetime.fromisoformat(str(t["completed_at"]).replace("Z", "+00:00"))
+                total += (t1 - t0).total_seconds()
+            except (KeyError, ValueError):
+                continue
+        failures = r.get("failures")
+        results[uid] = (
+            str(r.get("status") or ""),
+            total,
+            int(failures) if failures is not None else None,
+        )
+    for t in test_rows:
+        if t["unique_id"] in results:
+            t["last_status"], t["last_execution_time"], t["last_failures"] = results[
+                t["unique_id"]
+            ]
+
+
+def _parse_rows(
+    manifest_path: str, catalog_path: str | None, run_results_path: str | None
+) -> dict[str, list]:
+    """The parse tables' rows, keyed by table name, enriched from the
+    catalog and run results before any DataFrame exists."""
+    man = mf.load_manifest(manifest_path)
+    sources, source_columns = mf.parse_sources(man)
+    rows = {
+        "models": mf.parse_models(man),
+        "columns": mf.parse_columns(man),
+        "sources": sources,
+        "source_columns": source_columns,
+        "tests": mf.parse_tests(man),
+        "macros": mf.parse_macros(man),
+        "exposures": mf.parse_exposures(man),
+        "edges": mf.parse_edges(man),
+        "index_metadata": mf.parse_metadata(man),
+    }
+    if catalog_path:
+        _enrich_from_catalog(catalog_path, rows["models"], rows["columns"])
+    if run_results_path:
+        _enrich_from_run_results(run_results_path, rows["tests"])
+    return rows
 
 
 def _build_postings_local(
@@ -128,19 +249,21 @@ def _build_postings_local(
     return postings, docstats
 
 
-TABLES = (
-    "models",
-    "columns",
-    "sources",
-    "source_columns",
-    "tests",
-    "macros",
-    "exposures",
-    "edges",
-    "index_metadata",
-    "postings",
-    "docstats",
-)
+#: every index table and its schema
+SCHEMAS = {
+    "models": schemas.MODELS,
+    "columns": schemas.COLUMNS,
+    "sources": schemas.SOURCES,
+    "source_columns": schemas.SOURCE_COLUMNS,
+    "tests": schemas.TESTS,
+    "macros": schemas.MACROS,
+    "exposures": schemas.EXPOSURES,
+    "edges": schemas.EDGES,
+    "index_metadata": schemas.METADATA,
+    "postings": "unique_id string, field string, term string, tf long",
+    "docstats": "unique_id string, field string, dl long",
+}
+TABLES = tuple(SCHEMAS)
 
 
 @dataclass
@@ -174,67 +297,30 @@ class AriadneIndex:
         config: EngineConfig | None = None,
     ) -> "AriadneIndex":
         config = config or EngineConfig()
-        man = mf.load_manifest(manifest_path)
-
-        def df(rows, schema):
-            return spark.createDataFrame(rows, schema)
-
-        model_rows = mf.parse_models(man)
-        column_rows = mf.parse_columns(man)
-        test_rows = mf.parse_tests(man)
-        edge_rows = mf.parse_edges(man)
-
-        local_build = len(model_rows) <= config.local_build_max_models
+        rows = _parse_rows(manifest_path, catalog_path, run_results_path)
+        local_build = len(rows["models"]) <= config.local_build_max_models
         if local_build:
             # metadata-scale manifest: derive degrees/PK-FK/postings in
             # pure Python over the parsed rows BEFORE creating any
-            # DataFrame — every index table becomes a local relation and
-            # the build runs zero Spark jobs. The distributed derivations
+            # DataFrame — every index table becomes a local relation, the
+            # serving snapshot is laid out from the same rows, and the
+            # build runs zero Spark jobs. The distributed derivations
             # below handle larger manifests with identical semantics
             # (parity pinned in tests/test_indexer.py).
-            _derive_degrees_local(model_rows, edge_rows)
-            _derive_pk_fk_local(column_rows, test_rows)
-            posting_rows, docstat_rows = _build_postings_local(
-                model_rows, column_rows, config
+            _derive_degrees_local(rows["models"], rows["edges"])
+            _derive_pk_fk_local(rows["columns"], rows["tests"])
+            rows["postings"], rows["docstats"] = _build_postings_local(
+                rows["models"], rows["columns"], config
             )
-
-        models = df(model_rows, schemas.MODELS)
-        columns = df(column_rows, schemas.COLUMNS)
-        src_rows, src_col_rows = mf.parse_sources(man)
-        sources = df(src_rows, schemas.SOURCES)
-        source_columns = df(src_col_rows, schemas.SOURCE_COLUMNS)
-        tests = df(test_rows, schemas.TESTS)
-        macros = df(mf.parse_macros(man), schemas.MACROS)
-        exposures = df(mf.parse_exposures(man), schemas.EXPOSURES)
-        edges = df(edge_rows, schemas.EDGES)
-        meta = df(mf.parse_metadata(man), schemas.METADATA)
-
+        else:
+            rows["postings"] = rows["docstats"] = []
         idx = cls(
             spark=spark,
-            models=models,
-            columns=columns,
-            sources=sources,
-            source_columns=source_columns,
-            tests=tests,
-            macros=macros,
-            exposures=exposures,
-            edges=edges,
-            index_metadata=meta,
-            postings=spark.createDataFrame(
-                posting_rows if local_build else [],
-                "unique_id string, field string, term string, tf long",
-            ),
-            docstats=spark.createDataFrame(
-                docstat_rows if local_build else [],
-                "unique_id string, field string, dl long",
-            ),
             config=config,
+            **{t: spark.createDataFrame(rows[t], SCHEMAS[t]) for t in TABLES},
         )
         if local_build:
-            if catalog_path:
-                idx.enrich_from_catalog(catalog_path)
-            if run_results_path:
-                idx.enrich_from_run_results(run_results_path)
+            idx._local = LocalIndexCache.from_rows(rows, config)
             return idx
         # distributed path: the index tables are bigger, but shuffles on
         # them are still metadata-scale; a small partition count keeps
@@ -246,10 +332,6 @@ class AriadneIndex:
             idx._compute_degrees()
             idx._compute_pk_fk()
             idx._build_postings()
-            if catalog_path:
-                idx.enrich_from_catalog(catalog_path)
-            if run_results_path:
-                idx.enrich_from_run_results(run_results_path)
             # only the DERIVED tables carry deep plans worth truncating;
             # the parse tables are already local relations — skipping
             # their checkpoint saves one Spark job each (postings is
@@ -265,22 +347,13 @@ class AriadneIndex:
     #: delta of the last ``refresh()``: {"changed": n, "reused": n, "removed": n}
     last_refresh_stats: dict | None = None
 
-    def doc_signatures(self) -> dict[str, str]:
-        """Per-model search-doc content hashes for the CURRENT index
-        state (what the existing postings encode). Metadata-scale
-        collect — the same envelope every serving snapshot already pays."""
-        cols_by_model: dict[str, list[str]] = {}
-        for r in self.columns.select("model_id", "name").collect():
-            cols_by_model.setdefault(r["model_id"], []).append(r["name"])
-        out = {}
-        for r in self.models.select(
-            "unique_id", "name", "description", "compiled_code", "raw_code", "tags"
-        ).collect():
-            m = r.asDict()
-            out[m["unique_id"]] = _doc_signature(
-                m, cols_by_model.get(m["unique_id"], []), self.config
-            )
-        return out
+    def _snapshot_signatures(self) -> dict[str, str]:
+        """Doc signatures of what this index's postings encode, read from
+        its serving snapshot."""
+        snap = self.local()
+        return _doc_signatures(
+            snap.models.values(), chain.from_iterable(snap.columns.values()), self.config
+        )
 
     def manifest_delta(self, manifest_path: str) -> dict:
         """Doc-level diff of a new manifest against THIS index's state:
@@ -288,18 +361,8 @@ class AriadneIndex:
         unique_id (the same signatures ``refresh`` uses to decide what
         to re-tokenize). Parse-only — no index is built."""
         man = mf.load_manifest(manifest_path)
-        model_rows = mf.parse_models(man)
-        column_rows = mf.parse_columns(man)
-        cols_by_model: dict[str, list[str]] = {}
-        for c in column_rows:
-            cols_by_model.setdefault(c["model_id"], []).append(c["name"])
-        new_sigs = {
-            m["unique_id"]: _doc_signature(
-                m, cols_by_model.get(m["unique_id"], []), self.config
-            )
-            for m in model_rows
-        }
-        old_sigs = self.doc_signatures()
+        new_sigs = _doc_signatures(mf.parse_models(man), mf.parse_columns(man), self.config)
+        old_sigs = self._snapshot_signatures()
         return {
             "changed": sorted(
                 u for u, s in new_sigs.items() if u in old_sigs and old_sigs[u] != s
@@ -317,122 +380,103 @@ class AriadneIndex:
     ) -> "AriadneIndex":
         """Incremental hash-delta reindex (the reference's README roadmap
         defers this to v1.0; its v0.1 ships only full snapshot replace,
-        reference: indexer.py:90-98). Returns a NEW index; ``self`` is
-        untouched (snapshot semantics, like the serving cache).
+        reference: indexer.py:90-98). Returns a NEW index; ``self`` and
+        its snapshot are untouched.
 
         What is incremental: posting/docstat rows — the only per-model
         derived artifact whose rebuild cost is real (tokenize + Porter
-        stem). Models whose doc signature (``_doc_signature``) is
-        unchanged keep their existing rows via a broadcast anti-join on
-        the (typically small) changed∪removed id set + union — at cluster
-        scale that is one map-side join over the old postings, no
-        re-tokenization. Parse tables are always replaced (parsing the
-        manifest is the unavoidable driver cost), and degrees/centrality/
-        PK-FK always recompute: they are global aggregates an edge change
-        anywhere can shift, and they cost a handful of metadata-scale
-        shuffles.
+        stem). The old doc signatures (``_doc_signature``) come from this
+        index's serving snapshot (``local()``; a loaded or distributed
+        index collects it once here). Models whose signature is unchanged
+        keep their rows; only changed and added models re-tokenize. Parse
+        tables are always replaced (parsing the manifest is the
+        unavoidable driver cost), and degrees/centrality/PK-FK always
+        recompute: they are global aggregates an edge change anywhere can
+        shift.
 
-        Equality with a from-scratch ``build()`` on the new manifest is
-        pinned by tests/test_incremental.py (modify / add / remove /
-        no-op cases)."""
+        On the metadata-scale path the refresh runs zero Spark jobs: the
+        new snapshot is laid out from the parsed rows plus this
+        snapshot's kept postings and the fresh ones, and the DataFrame
+        postings are a lazy broadcast anti-join + union over the old
+        ones. The distributed path derives with DataFrames and its
+        snapshot is collected on first ``local()``.
+
+        Equality with a from-scratch ``build()`` on the new manifest, for
+        the tables and the snapshot, is pinned by tests/test_incremental.py
+        (modify / add / remove / no-op cases)."""
         spark, config = self.spark, self.config
-        man = mf.load_manifest(manifest_path)
-        model_rows = mf.parse_models(man)
-        column_rows = mf.parse_columns(man)
-        test_rows = mf.parse_tests(man)
-        edge_rows = mf.parse_edges(man)
-
-        cols_by_model: dict[str, list[str]] = {}
-        for c in column_rows:
-            cols_by_model.setdefault(c["model_id"], []).append(c["name"])
-        new_sigs = {
-            m["unique_id"]: _doc_signature(
-                m, cols_by_model.get(m["unique_id"], []), config
-            )
-            for m in model_rows
-        }
-        old_sigs = self.doc_signatures()
+        rows = _parse_rows(manifest_path, catalog_path, run_results_path)
+        new_sigs = _doc_signatures(rows["models"], rows["columns"], config)
+        old_sigs = self._snapshot_signatures()
         changed = {u for u, s in new_sigs.items() if old_sigs.get(u) != s}
         removed = set(old_sigs) - set(new_sigs)
         reused = set(new_sigs) - changed
         # rows to drop from the old postings: changed docs (stale) and
         # removed docs (gone); reused docs pass through untouched
-        dropped = sorted(changed | removed)
+        dropped = changed | removed
 
-        def df(rows, schema):
-            return spark.createDataFrame(rows, schema)
-
-        local_build = len(model_rows) <= config.local_build_max_models
+        local_build = len(rows["models"]) <= config.local_build_max_models
         if local_build:
-            _derive_degrees_local(model_rows, edge_rows)
-            _derive_pk_fk_local(column_rows, test_rows)
+            _derive_degrees_local(rows["models"], rows["edges"])
+            _derive_pk_fk_local(rows["columns"], rows["tests"])
             posting_rows, docstat_rows = _build_postings_local(
-                [m for m in model_rows if m["unique_id"] in changed],
-                [c for c in column_rows if c["model_id"] in changed],
+                [m for m in rows["models"] if m["unique_id"] in changed],
+                [c for c in rows["columns"] if c["model_id"] in changed],
                 config,
             )
 
-        src_rows, src_col_rows = mf.parse_sources(man)
-        drop_df = df([(u,) for u in dropped], "unique_id string")
+        drop_df = spark.createDataFrame([(u,) for u in sorted(dropped)], "unique_id string")
         kept_postings = self.postings.join(F.broadcast(drop_df), "unique_id", "left_anti")
         kept_docstats = self.docstats.join(F.broadcast(drop_df), "unique_id", "left_anti")
-
         idx = AriadneIndex(
             spark=spark,
-            models=df(model_rows, schemas.MODELS),
-            columns=df(column_rows, schemas.COLUMNS),
-            sources=df(src_rows, schemas.SOURCES),
-            source_columns=df(src_col_rows, schemas.SOURCE_COLUMNS),
-            tests=df(test_rows, schemas.TESTS),
-            macros=df(mf.parse_macros(man), schemas.MACROS),
-            exposures=df(mf.parse_exposures(man), schemas.EXPOSURES),
-            edges=df(edge_rows, schemas.EDGES),
-            index_metadata=df(mf.parse_metadata(man), schemas.METADATA),
+            config=config,
             postings=kept_postings,
             docstats=kept_docstats,
-            config=config,
+            # rows holds the parse tables only
+            **{t: spark.createDataFrame(rows[t], SCHEMAS[t]) for t in TABLES if t in rows},
         )
-        if local_build:
-            idx.postings = kept_postings.unionByName(
-                df(posting_rows, "unique_id string, field string, term string, tf long")
-            )
-            idx.docstats = kept_docstats.unionByName(
-                df(docstat_rows, "unique_id string, field string, dl long")
-            )
-        else:
-            old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
-            try:
-                idx._compute_degrees()
-                idx._compute_pk_fk()
-                if changed:
-                    idx._build_postings(only_ids=sorted(changed))
-                    # _build_postings replaced postings/docstats with the
-                    # changed-docs-only build; merge the reused rows back
-                    idx.postings = kept_postings.unionByName(
-                        idx.postings
-                    ).localCheckpoint(eager=True)
-                    idx.docstats = kept_docstats.unionByName(idx.docstats)
-                idx.cache(tables=("models", "columns", "tests"))
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if catalog_path:
-            idx.enrich_from_catalog(catalog_path)
-        if run_results_path:
-            idx.enrich_from_run_results(run_results_path)
         idx.last_refresh_stats = {
             "changed": len(changed),
             "reused": len(reused),
             "removed": len(removed),
         }
+        if local_build:
+            idx.postings = kept_postings.unionByName(
+                spark.createDataFrame(posting_rows, SCHEMAS["postings"])
+            )
+            idx.docstats = kept_docstats.unionByName(
+                spark.createDataFrame(docstat_rows, SCHEMAS["docstats"])
+            )
+            snap = self.local()
+            rows["postings"] = chain(snap.posting_rows(dropped), posting_rows)
+            rows["docstats"] = chain(snap.docstat_rows(dropped), docstat_rows)
+            idx._local = LocalIndexCache.from_rows(rows, config)
+            return idx
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        try:
+            idx._compute_degrees()
+            idx._compute_pk_fk()
+            if changed:
+                idx._build_postings(only_ids=sorted(changed))
+                # _build_postings replaced postings/docstats with the
+                # changed-docs-only build; merge the reused rows back
+                idx.postings = kept_postings.unionByName(
+                    idx.postings
+                ).localCheckpoint(eager=True)
+                idx.docstats = kept_docstats.unionByName(idx.docstats)
+            idx.cache(tables=("models", "columns", "tests"))
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         return idx
 
     def local(self):
-        """Driver-local snapshot, the tool server's read path (built
-        once per index — see operators/local_cache.py)."""
+        """Driver-local snapshot, the tool server's read path (see
+        operators/local_cache.py). ``build`` and ``refresh`` lay it out
+        from their rows on the metadata-scale path; a loaded or
+        distributed index collects its tables into it on first use."""
         if self._local is None:
-            from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
-
             self._local = LocalIndexCache.from_index(self)
         return self._local
 
@@ -579,109 +623,6 @@ class AriadneIndex:
         self.postings = postings.localCheckpoint(eager=True)
         self.docstats = self.postings.groupBy("unique_id", "field").agg(
             F.sum("tf").alias("dl")
-        )
-
-    # -- enrichment ----------------------------------------------------------
-    def enrich_from_catalog(self, catalog_path: str) -> None:
-        """S2: join catalog stats (row_count/bytes/last_modified) into
-        models and column data_types (case-insensitive) into columns."""
-        import json
-
-        with open(catalog_path) as f:
-            cat = json.load(f)
-        stat_rows, col_rows = [], []
-        for uid, node in (cat.get("nodes") or {}).items():
-            stats = node.get("stats") or {}
-
-            def stat(name):
-                v = (stats.get(name) or {}).get("value")
-                try:
-                    return int(float(v)) if v is not None else None
-                except (TypeError, ValueError):
-                    return None
-
-            stat_rows.append({
-                "unique_id": uid,
-                "_row_count": stat("num_rows") or stat("row_count"),
-                "_bytes": stat("num_bytes") or stat("bytes"),
-                "_last_modified": (node.get("metadata") or {}).get("last_modified")
-                or (stats.get("last_modified") or {}).get("value"),
-            })
-            for cname, c in (node.get("columns") or {}).items():
-                col_rows.append({
-                    "unique_id": uid,
-                    "_col_lower": str(c.get("name") or cname).lower(),
-                    "_data_type": str(c.get("type") or ""),
-                })
-        if stat_rows:
-            sdf = self.spark.createDataFrame(
-                stat_rows,
-                "unique_id string, _row_count long, _bytes long, _last_modified string",
-            )
-            self.models = (
-                self.models.drop("row_count", "bytes", "last_modified")
-                .join(F.broadcast(sdf), "unique_id", "left")
-                .withColumnRenamed("_row_count", "row_count")
-                .withColumnRenamed("_bytes", "bytes")
-                .withColumnRenamed("_last_modified", "last_modified")
-            )
-        if col_rows:
-            cdf = self.spark.createDataFrame(
-                col_rows, "unique_id string, _col_lower string, _data_type string"
-            )
-            cols = self.columns
-            self.columns = (
-                cols.join(
-                    F.broadcast(cdf),
-                    (cols.model_id == cdf.unique_id)
-                    & (F.lower(cols.name) == cdf._col_lower),
-                    "left",
-                )
-                .withColumn(
-                    "data_type",
-                    F.coalesce(F.nullif("_data_type", F.lit("")), F.col("data_type")),
-                )
-                .drop("unique_id", "_col_lower", "_data_type")
-            )
-
-    def enrich_from_run_results(self, path: str) -> None:
-        """S3: test status + Σ(timing deltas) + failures, tests only."""
-        import json
-        from datetime import datetime
-
-        with open(path) as f:
-            rr = json.load(f)
-        rows = []
-        for r in rr.get("results") or []:
-            uid = r.get("unique_id") or ""
-            if not uid.startswith("test."):
-                continue
-            total = 0.0
-            for t in r.get("timing") or []:
-                try:
-                    t0 = datetime.fromisoformat(str(t["started_at"]).replace("Z", "+00:00"))
-                    t1 = datetime.fromisoformat(str(t["completed_at"]).replace("Z", "+00:00"))
-                    total += (t1 - t0).total_seconds()
-                except (KeyError, ValueError):
-                    continue
-            failures = r.get("failures")
-            rows.append({
-                "unique_id": uid,
-                "_status": str(r.get("status") or ""),
-                "_exec": total,
-                "_failures": int(failures) if failures is not None else None,
-            })
-        if not rows:
-            return
-        rdf = self.spark.createDataFrame(
-            rows, "unique_id string, _status string, _exec double, _failures int"
-        )
-        self.tests = (
-            self.tests.drop("last_status", "last_execution_time", "last_failures")
-            .join(F.broadcast(rdf), "unique_id", "left")
-            .withColumnRenamed("_status", "last_status")
-            .withColumnRenamed("_exec", "last_execution_time")
-            .withColumnRenamed("_failures", "last_failures")
         )
 
     # -- persistence (S5: full-refresh overwrite) ----------------------------

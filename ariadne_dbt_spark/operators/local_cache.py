@@ -11,19 +11,26 @@ pinned per tool by tests/test_local_serving.py and
 tests/test_server_parity.py. The DataFrame operators remain the batch
 and registry path (``workloads/``, ``cli.py``).
 
-Build cost: one collect per index table, once per index build or
-refresh (``AriadneIndex.local()``). The snapshot holds every index
-table in driver memory, so its footprint is the server's memory
-envelope: it grows with the manifest, not with the traffic.
+Build cost: none on the metadata-scale path. ``AriadneIndex.build`` and
+``refresh`` hand the rows they parsed and derived to ``from_rows`` (a
+refresh reuses its parent snapshot's postings for the unchanged docs and
+never mutates that snapshot). A loaded or distributed index collects
+each table once, on its first ``AriadneIndex.local()``, through
+``from_index``, which lays the rows out with the same ``from_rows``.
+The snapshot holds every index table in driver memory, so its footprint
+is the server's memory envelope: it grows with the manifest, not with
+the traffic.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from collections.abc import Iterable, Iterator, Mapping
 from dataclasses import dataclass, field
 from decimal import ROUND_HALF_UP, Decimal
 
+from ariadne_dbt_spark import schemas
 from ariadne_dbt_spark.config import HYBRID_WEIGHTS, LAYER_BOOSTS, EngineConfig
 from ariadne_dbt_spark.functions.text import tokenize_query
 from ariadne_dbt_spark.operators.search import B, DEFAULT_FIELD_WEIGHTS, K1
@@ -56,28 +63,63 @@ class LocalIndexCache:
         return self.config.stem_tokens
 
     @classmethod
-    def from_index(cls, index) -> "LocalIndexCache":
-        c = cls(config=index.config)
-        c.models = {r["unique_id"]: r.asDict() for r in index.models.collect()}
-        for r in index.columns.collect():
-            c.columns.setdefault(r["model_id"], []).append(r.asDict())
+    def from_rows(cls, rows: Mapping[str, Iterable], config: EngineConfig) -> "LocalIndexCache":
+        """Lay out the index tables' rows, keyed by table name: dicts per
+        table row, postings as ``(unique_id, field, term, tf)`` and
+        docstats as ``(unique_id, field, dl)`` tuples. Every row dict is
+        new, keyed by its table's schema, so the snapshot shares no row
+        with its inputs."""
+
+        def project(table: str, schema) -> list[dict]:
+            names = schema.fieldNames()
+            return [{k: r[k] for k in names} for r in rows[table]]
+
+        c = cls(config=config)
+        c.models = {r["unique_id"]: r for r in project("models", schemas.MODELS)}
+        for r in project("columns", schemas.COLUMNS):
+            c.columns.setdefault(r["model_id"], []).append(r)
         for cols in c.columns.values():
             cols.sort(key=lambda x: x["name"])
-        for r in index.tests.collect():
-            c.tests.setdefault(r["model_id"], []).append(r.asDict())
-        c.macros = [r.asDict() for r in index.macros.collect()]
-        c.sources = {r["unique_id"]: r.asDict() for r in index.sources.collect()}
-        c.exposures = {r["unique_id"]: r.asDict() for r in index.exposures.collect()}
-        for r in index.edges.collect():
-            c.children.setdefault(r.parent_id, []).append(r.child_id)
-            c.parents.setdefault(r.child_id, []).append(r.parent_id)
-        for r in index.postings.collect():
-            c.postings.setdefault(r["field"], {}).setdefault(r["term"], {})[
-                r["unique_id"]
-            ] = r["tf"]
-        for r in index.docstats.collect():
-            c.docstats.setdefault(r["field"], {})[r["unique_id"]] = r["dl"]
+        for r in project("tests", schemas.TESTS):
+            c.tests.setdefault(r["model_id"], []).append(r)
+        c.macros = project("macros", schemas.MACROS)
+        c.sources = {r["unique_id"]: r for r in project("sources", schemas.SOURCES)}
+        c.exposures = {r["unique_id"]: r for r in project("exposures", schemas.EXPOSURES)}
+        for e in rows["edges"]:
+            c.children.setdefault(e["parent_id"], []).append(e["child_id"])
+            c.parents.setdefault(e["child_id"], []).append(e["parent_id"])
+        for uid, fld, term, tf in rows["postings"]:
+            c.postings.setdefault(fld, {}).setdefault(term, {})[uid] = tf
+        for uid, fld, dl in rows["docstats"]:
+            c.docstats.setdefault(fld, {})[uid] = dl
         return c
+
+    @classmethod
+    def from_index(cls, index) -> "LocalIndexCache":
+        """Collect each index table, then lay it out with ``from_rows``."""
+        rows = {
+            t: [r.asDict() for r in getattr(index, t).collect()]
+            for t in ("models", "columns", "tests", "macros", "sources", "exposures", "edges")
+        }
+        rows["postings"] = index.postings.select("unique_id", "field", "term", "tf").collect()
+        rows["docstats"] = index.docstats.select("unique_id", "field", "dl").collect()
+        return cls.from_rows(rows, index.config)
+
+    def posting_rows(self, exclude: set[str]) -> Iterator[tuple]:
+        """``(unique_id, field, term, tf)`` per posting of a doc not in
+        ``exclude``."""
+        for fld, terms in self.postings.items():
+            for term, docs in terms.items():
+                for uid, tf in docs.items():
+                    if uid not in exclude:
+                        yield uid, fld, term, tf
+
+    def docstat_rows(self, exclude: set[str]) -> Iterator[tuple]:
+        """``(unique_id, field, dl)`` per doc field not in ``exclude``."""
+        for fld, stats in self.docstats.items():
+            for uid, dl in stats.items():
+                if uid not in exclude:
+                    yield uid, fld, dl
 
     # -- graph (pure-python BFS; same semantics as operators.graph.bfs) ------
     def bfs(self, starts: list[str], direction: str, max_depth: int,

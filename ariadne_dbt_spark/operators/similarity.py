@@ -1050,12 +1050,6 @@ def ivf_maintenance_report(index_dir: str, **kw) -> dict:
     return epoch_store.maintenance_report(index_dir, "vectors", "stats.json", **kw)
 
 
-def ivf_pq_maintenance_report(index_dir: str, **kw) -> dict:
-    """Compaction-cadence signal for the IVF-PQ codes index — see
-    :func:`ivf_maintenance_report`; fold with :func:`ivf_pq_compact`."""
-    return epoch_store.maintenance_report(index_dir, "codes", "index_meta.json", **kw)
-
-
 def ivf_query_index(
     spark,
     index_dir: str,

@@ -12,9 +12,11 @@ Tools (names mirror the reference):
 
 Every read tool answers from the index's driver-local snapshot
 (``AriadneIndex.local()``, operators/local_cache.py) and launches no
-Spark job: the snapshot is built when the server starts and again by
-``refresh_index``, never on a read, and the server's memory envelope is
-the snapshot's. The DataFrame operators the snapshot twins
+Spark job. On the metadata-scale path neither does server start or
+``refresh_index``: the build and the refresh lay the snapshot out from
+the rows they already hold. A loaded index collects its tables into the
+snapshot when the server starts, never on a read. The server's memory
+envelope is the snapshot's. The DataFrame operators the snapshot twins
 (model_search, lineage, capsule, patterns, antipatterns) are the batch
 and registry path; tests/test_server_parity.py pins every tool's answer
 to them.
@@ -36,7 +38,7 @@ from ariadne_dbt_spark.operators.usage import SessionEventLog, UsageLog
 class ToolServer:
     def __init__(self, index: AriadneIndex, *, usage_dir: str | None = None):
         self.index = index
-        self.index.local()  # build the snapshot now, so no read pays for it
+        self.index.local()  # a loaded index collects its snapshot now, not on a read
         self.usage = UsageLog(index.spark, usage_dir) if usage_dir else None
         self.events = (
             SessionEventLog(index.spark, usage_dir + "_session_events")
@@ -217,7 +219,7 @@ class ToolServer:
             manifest_path,
             catalog_path=catalog_path, run_results_path=run_results_path,
         )
-        cache = self.index.local()  # the new snapshot, built before any read
+        cache = self.index.local()  # laid out by refresh() from its rows
         return {
             "status": "ok",
             "models": len(cache.models),

@@ -2,7 +2,10 @@
 from-scratch ``build()`` on the new manifest while re-tokenizing only the
 models whose search-doc content actually changed (the reference's README
 roadmap defers incremental indexing to v1.0; v0.1 is full replace —
-reference: indexer.py:90-98)."""
+reference: indexer.py:90-98). On the metadata-scale path, building the
+index, starting the tool server and ``refresh_index`` run no Spark job,
+and the serving snapshot they lay out from rows equals the one collected
+from the tables (``LocalIndexCache.from_index``)."""
 
 from __future__ import annotations
 
@@ -11,8 +14,15 @@ import json
 import pytest
 
 from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
+from ariadne_dbt_spark.server import ToolServer
 
-from conftest import MANIFEST
+from conftest import FIXTURES, MANIFEST
+
+ENRICHED = {
+    "catalog_path": f"{FIXTURES}/catalog.json",
+    "run_results_path": f"{FIXTURES}/run_results.json",
+}
 
 
 def _rows(df, cols):
@@ -50,6 +60,37 @@ def _model_key(man: dict, name: str) -> str:
     return key
 
 
+def _edit(man: dict, case: str) -> dict:
+    """The manifest edit of each refresh case below, applied in place."""
+    if case == "modify":
+        man["nodes"][_model_key(man, "fct_orders")]["description"] = "order facts with NEW grain"
+    elif case == "remove":
+        key = _model_key(man, "dim_customers")
+        del man["nodes"][key]
+        man["parent_map"].pop(key, None)
+        for k in list(man["parent_map"]):
+            man["parent_map"][k] = [p for p in man["parent_map"][k] if p != key]
+    elif case == "add":
+        added = dict(man["nodes"][_model_key(man, "fct_orders")])
+        added["name"] = "fct_refunds"
+        added["unique_id"] = "model.jaffle_shop.fct_refunds"
+        added["description"] = "refund facts"
+        man["nodes"]["model.jaffle_shop.fct_refunds"] = added
+        man["parent_map"]["model.jaffle_shop.fct_refunds"] = [_model_key(man, "stg_payments")]
+    return man
+
+
+def _jobs_of(spark, group: str, fn):
+    """``fn()`` and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_refresh_noop_reuses_everything(spark, index):
     new = index.refresh(MANIFEST)
     assert new.last_refresh_stats == {"changed": 0, "reused": 5, "removed": 0}
@@ -57,9 +98,7 @@ def test_refresh_noop_reuses_everything(spark, index):
 
 
 def test_refresh_modified_description(spark, index, manifest_dict, tmp_path):
-    man = manifest_dict
-    man["nodes"][_model_key(man, "fct_orders")]["description"] = "order facts with NEW grain"
-    path = _write(tmp_path, man)
+    path = _write(tmp_path, _edit(manifest_dict, "modify"))
 
     new = index.refresh(path)
     assert new.last_refresh_stats["changed"] == 1
@@ -71,13 +110,8 @@ def test_refresh_modified_description(spark, index, manifest_dict, tmp_path):
 
 
 def test_refresh_removed_model(spark, index, manifest_dict, tmp_path):
-    man = manifest_dict
-    key = _model_key(man, "dim_customers")
-    del man["nodes"][key]
-    man["parent_map"].pop(key, None)
-    for k in list(man["parent_map"]):
-        man["parent_map"][k] = [p for p in man["parent_map"][k] if p != key]
-    path = _write(tmp_path, man)
+    key = _model_key(manifest_dict, "dim_customers")
+    path = _write(tmp_path, _edit(manifest_dict, "remove"))
 
     new = index.refresh(path)
     assert new.last_refresh_stats["removed"] == 1
@@ -86,15 +120,7 @@ def test_refresh_removed_model(spark, index, manifest_dict, tmp_path):
 
 
 def test_refresh_added_model(spark, index, manifest_dict, tmp_path):
-    man = manifest_dict
-    tmpl = man["nodes"][_model_key(man, "fct_orders")]
-    added = dict(tmpl)
-    added["name"] = "fct_refunds"
-    added["unique_id"] = "model.jaffle_shop.fct_refunds"
-    added["description"] = "refund facts"
-    man["nodes"]["model.jaffle_shop.fct_refunds"] = added
-    man["parent_map"]["model.jaffle_shop.fct_refunds"] = [_model_key(man, "stg_payments")]
-    path = _write(tmp_path, man)
+    path = _write(tmp_path, _edit(manifest_dict, "add"))
 
     new = index.refresh(path)
     assert new.last_refresh_stats["changed"] == 1  # the added model
@@ -179,3 +205,48 @@ def test_manifest_delta_parse_only(spark, index, manifest_dict, tmp_path):
     assert index.manifest_delta(MANIFEST) == {
         "changed": [], "added": [], "removed": [],
     }
+
+
+@pytest.mark.parametrize("enriched", [False, True], ids=["manifest", "enriched"])
+@pytest.mark.parametrize("case", ["noop", "modify", "add", "remove"])
+def test_server_start_and_refresh_run_no_spark_job(spark, manifest_dict, tmp_path, case, enriched):
+    """Server start and refresh_index lay the snapshot out from the rows
+    the build and the refresh hold: 0 Spark jobs, and the snapshot equals
+    both the one collected from the refreshed index and the one collected
+    from a from-scratch build on the new manifest."""
+    extra = ENRICHED if enriched else {}
+    path = _write(tmp_path, _edit(manifest_dict, case))
+    group = f"test-snapshot-{case}-{enriched}"
+    server, jobs = _jobs_of(
+        spark, group + "-start", lambda: ToolServer(AriadneIndex.build(spark, MANIFEST, **extra))
+    )
+    assert jobs == []
+    resp, jobs = _jobs_of(
+        spark,
+        group + "-refresh",
+        lambda: server.handle(
+            {"tool": "refresh_index", "args": {"manifest_path": path, **extra}}
+        ),
+    )
+    assert resp["status"] == "ok" and "error" not in resp["result"], resp
+    assert jobs == []
+    snap = server.index.local()
+    if enriched:  # catalog stats and test results reached the snapshot
+        assert any(m["row_count"] for m in snap.models.values())
+        assert any(t["last_status"] for ts in snap.tests.values() for t in ts)
+    assert snap == LocalIndexCache.from_index(server.index)
+    assert snap == LocalIndexCache.from_index(AriadneIndex.build(spark, path, **extra))
+
+
+def test_refresh_leaves_parent_snapshot_untouched(spark, manifest_dict, tmp_path):
+    """The serving episode pattern: refresh base → 1 → 2, then base → 1
+    again. No refresh may change the snapshot it starts from."""
+    p1 = _write(tmp_path, _edit(json.loads(json.dumps(manifest_dict)), "modify"))
+    (tmp_path / "2").mkdir()
+    p2 = _write(tmp_path / "2", _edit(_edit(manifest_dict, "modify"), "remove"))
+    base = AriadneIndex.build(spark, MANIFEST)
+    first = base.refresh(p1)
+    first.refresh(p2)
+    again = base.refresh(p1)
+    assert base.local() == LocalIndexCache.from_index(base)
+    assert first.local() == again.local()

@@ -132,3 +132,35 @@ def test_local_vs_distributed_build_parity(spark):
     assert rows(loc.postings, p_cols) == rows(dist.postings, p_cols)
     d_cols = ["unique_id", "field", "dl"]
     assert rows(loc.docstats, d_cols) == rows(dist.docstats, d_cols)
+
+
+def test_catalog_case_variant_columns_keep_one_row_per_column(spark, tmp_path):
+    """A catalog node whose column names differ only in case must not
+    duplicate the manifest's column rows: an exact-case match wins,
+    otherwise the first case-insensitive match in catalog order."""
+    import json
+
+    from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+    from tests.conftest import MANIFEST
+
+    uid = "model.webshop.fct_orders"
+    cat = tmp_path / "catalog.json"
+    cat.write_text(json.dumps({"nodes": {uid: {"columns": {
+        "ORDER_ID": {"name": "ORDER_ID", "type": "VARCHAR"},
+        "order_id": {"name": "order_id", "type": "BIGINT"},
+        "CUSTOMER_ID": {"name": "CUSTOMER_ID", "type": "INT"},
+        "Customer_Id": {"name": "Customer_Id", "type": "STRING"},
+    }}}}))
+    idx = AriadneIndex.build(spark, MANIFEST, catalog_path=str(cat))
+    rows = sorted(
+        (r.name, r.data_type) for r in idx.columns.where(F.col("model_id") == uid).collect()
+    )
+    assert rows == [
+        ("amount", "double"),
+        ("customer_id", "INT"),
+        ("order_id", "BIGINT"),
+        ("ordered_at", "timestamp"),
+        ("paid_amount", "double"),
+        ("status", "varchar"),
+    ]
+    assert sorted((c["name"], c["data_type"]) for c in idx.local().columns[uid]) == rows
