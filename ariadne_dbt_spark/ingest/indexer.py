@@ -1,5 +1,5 @@
-"""Index construction: manifest rows → typed DataFrames → derived
-computations (SURVEY §3.1 steps 3-5).
+"""Index construction: manifest rows → derived computations → index
+tables, DataFrames built on first use (SURVEY §3.1 steps 3-5).
 
 Refresh semantics are full snapshot replace, like the reference's
 DELETE+reinsert per table (reference: src/ariadne_dbt/indexer.py:90-98,
@@ -15,16 +15,15 @@ recomputes everything from the manifest. Derived computations:
 
 Catalog and run-results enrichment patch the parsed rows before any
 DataFrame exists. On the metadata-scale path (``local_build_max_models``)
-every derivation runs in Python over the same rows, which also lay out
-the serving snapshot (``LocalIndexCache.from_rows``); build and refresh
-run zero Spark jobs there.
+every derivation runs in Python over the same rows, which lay out the
+serving snapshot and stay the index's tables until a DataFrame operator
+first reads one: build and refresh create no DataFrame there.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
 from itertools import chain
 
 from pyspark.sql import DataFrame, SparkSession
@@ -266,24 +265,37 @@ SCHEMAS = {
 TABLES = tuple(SCHEMAS)
 
 
-@dataclass
 class AriadneIndex:
-    """The in-memory engine index: one DataFrame per table, all cached
-    (they are small — ≤10k models — while surface-B data scales)."""
+    """The in-memory engine index: one table per name in ``TABLES``, held
+    as rows (``build``, ``refresh``) or DataFrames (``load``). A table held
+    as rows becomes a DataFrame on its first attribute access."""
 
-    spark: SparkSession
-    models: DataFrame
-    columns: DataFrame
-    sources: DataFrame
-    source_columns: DataFrame
-    tests: DataFrame
-    macros: DataFrame
-    exposures: DataFrame
-    edges: DataFrame
-    index_metadata: DataFrame
-    postings: DataFrame
-    docstats: DataFrame
-    config: EngineConfig = field(default_factory=EngineConfig)
+    def __init__(
+        self,
+        spark: SparkSession,
+        config: EngineConfig | None = None,
+        *,
+        rows: dict[str, list] | None = None,
+        **frames: DataFrame,
+    ):
+        rows = dict(rows or {})
+        if {*rows, *frames} != set(TABLES):
+            raise TypeError(f"an index takes exactly the tables {TABLES}, as rows or frames")
+        self.spark = spark
+        self.config = config or EngineConfig()
+        self._rows = rows
+        self.__dict__.update(frames)
+
+    def __getattr__(self, name: str) -> DataFrame:
+        # a table still held as rows; they are dropped only after the
+        # frame is set, so a concurrent first access finds one or the other
+        data = self.__dict__.get("_rows", {}).get(name)
+        if data is None:  # not a table, or built meanwhile
+            return object.__getattribute__(self, name)
+        df = self.spark.createDataFrame(data, SCHEMAS[name])
+        setattr(self, name, df)
+        self._rows.pop(name, None)
+        return df
 
     # -- construction ------------------------------------------------------
     @classmethod
@@ -298,13 +310,11 @@ class AriadneIndex:
     ) -> "AriadneIndex":
         config = config or EngineConfig()
         rows = _parse_rows(manifest_path, catalog_path, run_results_path)
-        local_build = len(rows["models"]) <= config.local_build_max_models
-        if local_build:
+        if len(rows["models"]) <= config.local_build_max_models:
             # metadata-scale manifest: derive degrees/PK-FK/postings in
-            # pure Python over the parsed rows BEFORE creating any
-            # DataFrame — every index table becomes a local relation, the
-            # serving snapshot is laid out from the same rows, and the
-            # build runs zero Spark jobs. The distributed derivations
+            # pure Python over the parsed rows; the serving snapshot is
+            # laid out from the same rows, the build creates no DataFrame
+            # and runs zero Spark jobs. The distributed derivations
             # below handle larger manifests with identical semantics
             # (parity pinned in tests/test_indexer.py).
             _derive_degrees_local(rows["models"], rows["edges"])
@@ -312,16 +322,11 @@ class AriadneIndex:
             rows["postings"], rows["docstats"] = _build_postings_local(
                 rows["models"], rows["columns"], config
             )
-        else:
-            rows["postings"] = rows["docstats"] = []
-        idx = cls(
-            spark=spark,
-            config=config,
-            **{t: spark.createDataFrame(rows[t], SCHEMAS[t]) for t in TABLES},
-        )
-        if local_build:
+            idx = cls(spark, config, rows=rows)
             idx._local = LocalIndexCache.from_rows(rows, config)
             return idx
+        rows["postings"] = rows["docstats"] = []
+        idx = cls(spark, config, rows=rows)
         # distributed path: the index tables are bigger, but shuffles on
         # them are still metadata-scale; a small partition count keeps
         # task scheduling off the critical path (surface-B data queries
@@ -394,29 +399,33 @@ class AriadneIndex:
         recompute: they are global aggregates an edge change anywhere can
         shift.
 
-        On the metadata-scale path the refresh runs zero Spark jobs: the
-        new snapshot is laid out from the parsed rows plus this
-        snapshot's kept postings and the fresh ones, and the DataFrame
-        postings are a lazy broadcast anti-join + union over the old
-        ones. The distributed path derives with DataFrames and its
-        snapshot is collected on first ``local()``.
+        On the metadata-scale path the refresh runs zero Spark jobs and
+        creates no DataFrame: the new postings and docstats rows are this
+        snapshot's kept rows plus the fresh ones, and the new index and
+        its snapshot are both built from the same rows (its DataFrames on
+        first use). The distributed path keeps the reused postings as a
+        broadcast anti-join over the old DataFrames, derives with
+        DataFrames, and collects its snapshot on first ``local()``.
 
         Equality with a from-scratch ``build()`` on the new manifest, for
-        the tables and the snapshot, is pinned by tests/test_incremental.py
-        (modify / add / remove / no-op cases)."""
+        every table and the snapshot, is pinned by
+        tests/test_incremental.py (modify / add / remove / no-op cases)."""
         spark, config = self.spark, self.config
         rows = _parse_rows(manifest_path, catalog_path, run_results_path)
         new_sigs = _doc_signatures(rows["models"], rows["columns"], config)
         old_sigs = self._snapshot_signatures()
         changed = {u for u, s in new_sigs.items() if old_sigs.get(u) != s}
         removed = set(old_sigs) - set(new_sigs)
-        reused = set(new_sigs) - changed
+        stats = {
+            "changed": len(changed),
+            "reused": len(set(new_sigs) - changed),
+            "removed": len(removed),
+        }
         # rows to drop from the old postings: changed docs (stale) and
         # removed docs (gone); reused docs pass through untouched
         dropped = changed | removed
 
-        local_build = len(rows["models"]) <= config.local_build_max_models
-        if local_build:
+        if len(rows["models"]) <= config.local_build_max_models:
             _derive_degrees_local(rows["models"], rows["edges"])
             _derive_pk_fk_local(rows["columns"], rows["tests"])
             posting_rows, docstat_rows = _build_postings_local(
@@ -424,35 +433,21 @@ class AriadneIndex:
                 [c for c in rows["columns"] if c["model_id"] in changed],
                 config,
             )
+            snap = self.local()
+            rows["postings"] = [*snap.posting_rows(dropped), *posting_rows]
+            rows["docstats"] = [*snap.docstat_rows(dropped), *docstat_rows]
+            idx = AriadneIndex(spark, config, rows=rows)
+            idx._local = LocalIndexCache.from_rows(rows, config)
+            idx.last_refresh_stats = stats
+            return idx
 
         drop_df = spark.createDataFrame([(u,) for u in sorted(dropped)], "unique_id string")
         kept_postings = self.postings.join(F.broadcast(drop_df), "unique_id", "left_anti")
         kept_docstats = self.docstats.join(F.broadcast(drop_df), "unique_id", "left_anti")
         idx = AriadneIndex(
-            spark=spark,
-            config=config,
-            postings=kept_postings,
-            docstats=kept_docstats,
-            # rows holds the parse tables only
-            **{t: spark.createDataFrame(rows[t], SCHEMAS[t]) for t in TABLES if t in rows},
+            spark, config, rows=rows, postings=kept_postings, docstats=kept_docstats
         )
-        idx.last_refresh_stats = {
-            "changed": len(changed),
-            "reused": len(reused),
-            "removed": len(removed),
-        }
-        if local_build:
-            idx.postings = kept_postings.unionByName(
-                spark.createDataFrame(posting_rows, SCHEMAS["postings"])
-            )
-            idx.docstats = kept_docstats.unionByName(
-                spark.createDataFrame(docstat_rows, SCHEMAS["docstats"])
-            )
-            snap = self.local()
-            rows["postings"] = chain(snap.posting_rows(dropped), posting_rows)
-            rows["docstats"] = chain(snap.docstat_rows(dropped), docstat_rows)
-            idx._local = LocalIndexCache.from_rows(rows, config)
-            return idx
+        idx.last_refresh_stats = stats
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         try:
@@ -634,6 +629,6 @@ class AriadneIndex:
     @classmethod
     def load(cls, spark: SparkSession, out_dir: str, config: EngineConfig | None = None):
         kw = {t: spark.read.parquet(os.path.join(out_dir, t)) for t in TABLES}
-        idx = cls(spark=spark, config=config or EngineConfig(), **kw)
+        idx = cls(spark, config, **kw)
         idx.cache()
         return idx

@@ -12,14 +12,15 @@ Tools (names mirror the reference):
 
 Every read tool answers from the index's driver-local snapshot
 (``AriadneIndex.local()``, operators/local_cache.py) and launches no
-Spark job. On the metadata-scale path neither does server start or
-``refresh_index``: the build and the refresh lay the snapshot out from
-the rows they already hold. A loaded index collects its tables into the
-snapshot when the server starts, never on a read. The server's memory
-envelope is the snapshot's. The DataFrame operators the snapshot twins
-(model_search, lineage, capsule, patterns, antipatterns) are the batch
-and registry path; tests/test_server_parity.py pins every tool's answer
-to them.
+Spark job. On the metadata-scale path server start and ``refresh_index``
+launch none and create no DataFrame: the snapshot is laid out from the
+rows the build and the refresh hold, and the index makes a DataFrame only
+when a DataFrame operator first reads one. A loaded index collects its
+tables into the snapshot when the server starts, never on a read. The
+server's memory envelope is the snapshot's. The DataFrame operators the
+snapshot twins (model_search, lineage, capsule, patterns, antipatterns)
+are the batch and registry path; tests/test_server_parity.py pins every
+tool's answer to them.
 
 Every call is usage-logged (S8) with duration, like the reference.
 """

@@ -30,6 +30,12 @@ TABLE_NAMES = (
 )
 
 
+def driver_memory(phys_bytes: int) -> str:
+    """Default ``spark.driver.memory`` for a host with ``phys_bytes`` of
+    physical memory: 3/4 of it, at most 64g, in whole MiB."""
+    return f"{min(64 << 10, phys_bytes * 3 // 4 >> 20)}m"
+
+
 def get_spark(app_name: str = "ariadne-dbt-spark") -> SparkSession:
     """Build (or reuse) a local SparkSession with sane analytical defaults."""
     import sys
@@ -40,6 +46,7 @@ def get_spark(app_name: str = "ariadne-dbt-spark") -> SparkSession:
     if sys.getrecursionlimit() < 10_000:
         sys.setrecursionlimit(10_000)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -78,7 +85,7 @@ def get_spark(app_name: str = "ariadne-dbt-spark") -> SparkSession:
             "spark.sql.dataFrameQueryContext.enabled",
             os.environ.get("SPARK_GRAFT_DF_QUERY_CONTEXT", "false"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or driver_memory(phys))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -122,9 +122,6 @@ def synthetic_index(spark: SparkSession, sf_dir: str):
         F.array(F.col("p_brand")).alias("tags"),
     )
 
-    def empty(schema):
-        return spark.createDataFrame([], schema)
-
     models = m0.select(
         "unique_id",
         "name",
@@ -255,18 +252,15 @@ def synthetic_index(spark: SparkSession, sf_dir: str):
     edges = src_edge.unionByName(chain_edge).unionByName(exp_edge)
 
     idx = AriadneIndex(
-        spark=spark,
+        spark,
+        rows={t: [] for t in ("source_columns", "index_metadata", "postings", "docstats")},
         models=models,
         columns=columns,
         sources=sources,
-        source_columns=empty(schemas.SOURCE_COLUMNS),
         tests=tests,
         macros=macros,
         exposures=exposures,
         edges=edges,
-        index_metadata=empty(schemas.METADATA),
-        postings=empty("unique_id string, field string, term string, tf long"),
-        docstats=empty("unique_id string, field string, dl long"),
     )
     idx._compute_degrees()
     idx._compute_pk_fk()

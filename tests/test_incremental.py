@@ -3,9 +3,9 @@ from-scratch ``build()`` on the new manifest while re-tokenizing only the
 models whose search-doc content actually changed (the reference's README
 roadmap defers incremental indexing to v1.0; v0.1 is full replace —
 reference: indexer.py:90-98). On the metadata-scale path, building the
-index, starting the tool server and ``refresh_index`` run no Spark job,
-and the serving snapshot they lay out from rows equals the one collected
-from the tables (``LocalIndexCache.from_index``)."""
+index, starting the tool server and ``refresh_index`` run no Spark job
+and create no DataFrame, and the serving snapshot they lay out from rows
+equals the one collected from the tables (``LocalIndexCache.from_index``)."""
 
 from __future__ import annotations
 
@@ -13,11 +13,12 @@ import json
 
 import pytest
 
-from ariadne_dbt_spark.ingest.indexer import AriadneIndex
+from ariadne_dbt_spark.ingest.indexer import TABLES, AriadneIndex
 from ariadne_dbt_spark.operators.local_cache import LocalIndexCache
 from ariadne_dbt_spark.server import ToolServer
 
 from conftest import FIXTURES, MANIFEST
+from test_server_parity import CASES
 
 ENRICHED = {
     "catalog_path": f"{FIXTURES}/catalog.json",
@@ -29,18 +30,26 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
 
 
+def _canon(v):
+    """Sort key for a row or a cell of any index column: NULL sorts
+    first, rows and arrays element-wise, maps by key."""
+    if v is None:
+        return (0,)
+    if isinstance(v, dict):
+        return (1, tuple(sorted((k, _canon(x)) for k, x in v.items())))
+    if isinstance(v, (list, tuple)):
+        return (1, tuple(_canon(x) for x in v))
+    return (1, v)
+
+
 def _assert_same_index(a: AriadneIndex, b: AriadneIndex) -> None:
-    assert _rows(a.postings, ["unique_id", "field", "term", "tf"]) == _rows(
-        b.postings, ["unique_id", "field", "term", "tf"]
-    )
-    assert _rows(a.docstats, ["unique_id", "field", "dl"]) == _rows(
-        b.docstats, ["unique_id", "field", "dl"]
-    )
-    mcols = ["unique_id", "name", "description", "upstream_count", "downstream_count", "centrality"]
-    assert _rows(a.models, mcols) == _rows(b.models, mcols)
-    ccols = ["model_id", "name", "is_primary_key", "is_foreign_key"]
-    assert _rows(a.columns, ccols) == _rows(b.columns, ccols)
-    assert _rows(a.edges, ["parent_id", "child_id"]) == _rows(b.edges, ["parent_id", "child_id"])
+    """Every table: the same columns and types, and the same rows.
+    Nullability is left out: Spark derives it from the plan, and the
+    distributed path's coalesced counts and flags are non-null."""
+    for t in TABLES:
+        da, db = getattr(a, t), getattr(b, t)
+        assert da.schema.simpleString() == db.schema.simpleString(), t
+        assert sorted(map(_canon, da.collect())) == sorted(map(_canon, db.collect())), t
 
 
 @pytest.fixture()
@@ -209,33 +218,43 @@ def test_manifest_delta_parse_only(spark, index, manifest_dict, tmp_path):
 
 @pytest.mark.parametrize("enriched", [False, True], ids=["manifest", "enriched"])
 @pytest.mark.parametrize("case", ["noop", "modify", "add", "remove"])
-def test_server_start_and_refresh_run_no_spark_job(spark, manifest_dict, tmp_path, case, enriched):
-    """Server start and refresh_index lay the snapshot out from the rows
-    the build and the refresh hold: 0 Spark jobs, and the snapshot equals
-    both the one collected from the refreshed index and the one collected
-    from a from-scratch build on the new manifest."""
+def test_server_start_and_refresh_run_no_spark_job(
+    spark, manifest_dict, tmp_path, monkeypatch, case, enriched
+):
+    """Server start, one call of every read tool and refresh_index run
+    no Spark job and create no DataFrame: the build and the refresh lay
+    the snapshot out from the rows they hold. The snapshot equals the
+    one collected from the refreshed index and the one collected from a
+    from-scratch build on the new manifest, and so does every table the
+    refreshed index then builds on first use."""
     extra = ENRICHED if enriched else {}
     path = _write(tmp_path, _edit(manifest_dict, case))
-    group = f"test-snapshot-{case}-{enriched}"
-    server, jobs = _jobs_of(
-        spark, group + "-start", lambda: ToolServer(AriadneIndex.build(spark, MANIFEST, **extra))
+    created = []
+    create = spark.createDataFrame
+    monkeypatch.setattr(
+        spark, "createDataFrame", lambda *a, **kw: created.append(1) or create(*a, **kw)
     )
+
+    def session():
+        server = ToolServer(AriadneIndex.build(spark, MANIFEST, **extra))
+        for tool, args in dict(CASES).items():
+            assert server.handle({"tool": tool, "args": dict(args)})["status"] == "ok", tool
+        resp = server.handle({"tool": "refresh_index", "args": {"manifest_path": path, **extra}})
+        assert resp["status"] == "ok" and "error" not in resp["result"], resp
+        return server
+
+    server, jobs = _jobs_of(spark, f"test-snapshot-{case}-{enriched}", session)
     assert jobs == []
-    resp, jobs = _jobs_of(
-        spark,
-        group + "-refresh",
-        lambda: server.handle(
-            {"tool": "refresh_index", "args": {"manifest_path": path, **extra}}
-        ),
-    )
-    assert resp["status"] == "ok" and "error" not in resp["result"], resp
-    assert jobs == []
+    assert len(created) == 0
+    monkeypatch.undo()
     snap = server.index.local()
     if enriched:  # catalog stats and test results reached the snapshot
         assert any(m["row_count"] for m in snap.models.values())
         assert any(t["last_status"] for ts in snap.tests.values() for t in ts)
+    fresh = AriadneIndex.build(spark, path, **extra)
     assert snap == LocalIndexCache.from_index(server.index)
-    assert snap == LocalIndexCache.from_index(AriadneIndex.build(spark, path, **extra))
+    assert snap == LocalIndexCache.from_index(fresh)
+    _assert_same_index(server.index, fresh)
 
 
 def test_refresh_leaves_parent_snapshot_untouched(spark, manifest_dict, tmp_path):
